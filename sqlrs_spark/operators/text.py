@@ -18,11 +18,7 @@ import pandas as pd
 
 from sqlrs_spark.functions.hashing import P31, h31_duck, h31_spark
 from sqlrs_spark.registry import register
-from sqlrs_spark.sources.tables import (
-    load_table,
-    register_parallelized,
-    register_views,
-)
+from sqlrs_spark.sources.tables import load_table, parallelized, register_views
 
 # words-per-language scoring lists (tiny built-in stopword lists; a real
 # pipeline would ship larger lists — the plan shape is identical)
@@ -1239,9 +1235,10 @@ def _p33(spark_dialect: bool) -> str:
             f" WHERE size(tk) >= {ng}"
         )
         digest = md5int_spark("kept")
+        # {documents} is bound by spark.sql to the caller's documents scan
         return f"""
 WITH toks AS (
-  SELECT doc_id, {toks} AS tk FROM documents WHERE text IS NOT NULL
+  SELECT doc_id, {toks} AS tk FROM {{documents}} WHERE text IS NOT NULL
 ),
 starts AS (
   {starts_src}
@@ -1342,14 +1339,12 @@ def p33_span_scrub(spark, sf_dir):
     boilerplate scores.  Beyond-reference: extends the pipeline dedup
     family with span-granular exact-substring removal.
 
-    r9: the documents view opts into the unsplittable-input repartition
-    (sources.tables.register_parallelized) — p33's per-row cost is
+    r9: the documents scan opts into the unsplittable-input repartition
+    (sources.tables.parallelized) — p33's per-row cost is
     ~n_tokens md5+conv evaluations per document (once per gram start, in
     BOTH subtree copies of the starts CTE), so a single-row-group input
     file pinned the whole gram pass to one core.  Measured same-session
     interleaved at sf0.1/32 cores: {3.35, 2.76, 2.88, 2.62} s →
     {1.90, 1.41, 1.34, 1.42} s (~2x).  No-op on splittable layouts (the
     trigger is measured row-group count vs session parallelism)."""
-    register_views(spark, sf_dir, ("documents",))
-    register_parallelized(spark, sf_dir, "documents")
-    return spark.sql(_p33(True))
+    return spark.sql(_p33(True), documents=parallelized(spark, sf_dir, "documents"))

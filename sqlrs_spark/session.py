@@ -31,6 +31,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sqlrs_spark.sources.tables import catalog
+
 
 #: Compiled Catalyst extension jar (built by tools/build_extension.sh from
 #: jvm/org/sqlrs/*.java).  Opt-in because a jar/extension pair only loads
@@ -580,7 +582,7 @@ class Session:
             if path.endswith(".csv"):
                 df = self.read_csv(path)
             elif path.endswith(".parquet"):
-                df = self.spark.read.parquet(path)
+                df = catalog(self.spark).read(path)
             else:
                 df = self.spark.read.json(path)
             stem = re.sub(r"\W", "_", os.path.splitext(os.path.basename(path))[0])

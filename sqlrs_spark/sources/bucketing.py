@@ -151,7 +151,9 @@ def adopt_bucketed(
     produced exactly one file per bucket (write_bucketed docstring).  This
     is the catalog-recovery half of any real bucketed ingest: data outlives
     metastores."""
-    schema = spark.read.parquet(location).schema
+    from sqlrs_spark.sources.tables import catalog
+
+    schema = catalog(spark).entry(location).schema
     cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
     sorted_clause = ""
     if sort_by:

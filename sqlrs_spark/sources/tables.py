@@ -1,16 +1,29 @@
-"""Parquet star-schema sources (driver testdata, TESTDATA.md).
+"""Parquet base tables, resolved through one per-session catalog.
 
-At 100 TB these would be partitioned/bucketed external tables; the read
-path here is a plain `spark.read.parquet` so Catalyst's datasource V2
-pushdown (filters + column pruning + partition pruning) applies untouched.
+Every base-table reference (``load_table``, ``register_views``,
+``common.t``, the ``FROM 'x.parquet'`` replacement scan, bucketed-layout
+adoption) binds against a :class:`TableCatalog` entry that already holds
+the table's schema, like the reference's ``TableCatalogEntry`` (SURVEY
+§1.1).  An entry is METADATA only, what Spark would otherwise re-derive
+per read: the inferred schema (a schema-less ``spark.read.parquet`` runs a
+one-task footer job per call) and layout facts (files, row groups, rows).
+Each resolution is a fresh ``spark.read.schema(cached).parquet(path)``: no
+job, distinct attribute ids per scan (self-joins), full pushdown, and every
+execution still scans parquet.  Entries are stamped with the file count,
+newest ``st_mtime_ns`` and total size, so a rewritten table is re-inferred.
+The catalog lives on the SparkContext under the session's id (every Python
+handle of a session shares it; it dies with the context) and also holds the
+session's measured-broadcast and bloom memos (``operators.common``).
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -25,51 +38,120 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any realistic scale factor.
-# region/nation are fixed-size in TPC-H; supplier/part/customer grow with SF
-# but stay several orders of magnitude below the fact tables.
-BROADCAST_SAFE = ("region", "nation")
 
-#: path -> (dir/file mtime_ns, total row groups, total rows).  File-layout
-#: METADATA only (the same thing Spark's own InMemoryFileIndex caches per
-#: session) — never query results, so reruns still compute from parquet.
-_SCAN_UNITS_CACHE: dict[str, tuple[int, int, int]] = {}
+def _data_files(path: str) -> tuple[list[str], tuple[int, int, int]]:
+    """The data files of a parquet table path and their stamp (file count,
+    newest ``st_mtime_ns``, total bytes).  Names starting with ``_`` or
+    ``.`` are not data, as in Spark's own file listing."""
+    files = [path]
+    if os.path.isdir(path):
+        files = []
+        for root, dirs, fs in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            files += [os.path.join(root, f) for f in sorted(fs) if not f.startswith(("_", "."))]
+    stats = [os.stat(f) for f in files]
+    mtime = max((s.st_mtime_ns for s in stats), default=0)
+    return files, (len(files), mtime, sum(s.st_size for s in stats))
 
 
-def _scan_units(path: str) -> tuple[int, int]:
+def _scan_units(files: list[str]) -> tuple[int, int]:
     """(splittable units, rows) of a parquet table: the number of row
     groups across part files — the finest granularity Spark can assign to
     independent scan tasks (parquet is row-group-splittable, never
     within a row group)."""
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        files = [
-            os.path.join(root, f)
-            for root, _, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-        stamp = os.stat(path).st_mtime_ns
-    else:
-        files = [path]
-        stamp = os.stat(path).st_mtime_ns
-    hit = _SCAN_UNITS_CACHE.get(path)
-    if hit and hit[0] == stamp:
-        return hit[1], hit[2]
     units = rows = 0
     for f in files:
         md = pq.ParquetFile(f).metadata
         units += md.num_row_groups
         rows += md.num_rows
-    _SCAN_UNITS_CACHE[path] = (stamp, units, rows)
     return units, rows
 
 
-def register_parallelized(spark: SparkSession, sf_dir: str, name: str) -> None:
-    """Re-register view ``name`` with the unsplittable-input repartition —
-    the optimization guide's §2.5 remedy ("one huge unsplittable file …
-    repartition immediately after the read"), OPT-IN per consumer.
+@dataclass
+class _Entry:
+    stamp: tuple[int, int, int]
+    files: list[str]
+    schema: StructType
+    layout: tuple[int, int] | None = None  # (row groups, rows), read on first use
+
+
+@dataclass
+class TableCatalog:
+    """One session's table entries, keyed by path, plus its memos."""
+
+    spark: SparkSession
+    entries: dict[str, _Entry] = field(default_factory=dict)
+    #: operators.common.measured_broadcast: (key, input_df, result,
+    #: persisted_or_None, measured_rows), least recently used first
+    measured: list[tuple] = field(default_factory=list)
+    #: operators.common.bloom_prefilter: (key, reduction_df, bloom_bytes)
+    blooms: list[tuple] = field(default_factory=list)
+
+    def entry(self, path: str) -> _Entry:
+        files, stamp = _data_files(path)
+        e = self.entries.get(path)
+        if e is None or e.stamp != stamp:
+            schema = self.spark.read.parquet(path).schema
+            e = self.entries[path] = _Entry(stamp, files, schema)
+        return e
+
+    def read(self, path: str) -> DataFrame:
+        """A fresh scan of the parquet table at ``path``."""
+        try:
+            schema = self.entry(path).schema
+        except OSError:
+            # not a local path: Spark resolves it (and reports what is wrong)
+            return self.spark.read.parquet(path)
+        return self.spark.read.schema(schema).parquet(path)
+
+    def layout(self, path: str) -> tuple[int, int]:
+        """(row groups, rows) of the table at ``path``."""
+        e = self.entry(path)
+        if e.layout is None:
+            e.layout = _scan_units(e.files)
+        return e.layout
+
+
+def catalog(spark: SparkSession) -> TableCatalog:
+    """The catalog of ``spark``'s session, created on first use."""
+    catalogs = spark.sparkContext.__dict__.setdefault("_sqlrs_catalogs", {})
+    key = spark._jsparkSession.sessionUUID()
+    cat = catalogs.get(key)
+    if cat is None:
+        cat = catalogs[key] = TableCatalog(spark)
+    return cat
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = f"{sf_dir}/{name}.parquet"
+    if name != "events":
+        return catalog(spark).read(path)
+    # events.ts has shipped as both TIMESTAMP(NANOS) (round 1) and naive
+    # timestamp[us] (current testdata).  NANOS is rejected by Spark's
+    # vectorized reader, so keep the nanos-as-long fallback: if the file
+    # is NANOS the column surfaces as bigint and gets truncated to
+    # micros (the same truncation DuckDB applies); a micros file reads
+    # straight through as TIMESTAMP_NTZ and the branch is a no-op.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = catalog(spark).read(path)
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
+
+
+def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:
+    """Register each parquet table as a temp view named by table name."""
+    for t in tables:
+        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+
+
+def parallelized(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` with the unsplittable-input repartition when its
+    layout calls for it — the standard remedy for one huge unsplittable
+    file (repartition immediately after the read), OPT-IN per consumer.  Returns a private frame; no view is touched, so other
+    operators of the session keep the plain scan.
 
     Parquet scans parallelize at row-group granularity, and the small-SF
     testdata ships every table as ONE file with ONE row group — so every
@@ -84,8 +166,8 @@ def register_parallelized(spark: SparkSession, sf_dir: str, name: str) -> None:
     exchange: q01 0.78→1.19, q05 0.97→1.44, t01 0.93→1.52,
     p01 0.28→0.51, p06 0.74→0.91, p38 1.48→1.89, p20 1.07→1.39 (measured
     before a blanket version of this was rejected).  Hence: a consumer
-    that knows its per-row cost is heavyweight calls this AFTER
-    register_views; everyone else keeps the plain scan.
+    that knows its per-row cost is heavyweight reads through this;
+    everyone else keeps the plain scan.
 
     Scale honesty: the trigger is the MEASURED layout — row groups <
     session parallelism — never a scale factor, so on any real cluster
@@ -97,38 +179,14 @@ def register_parallelized(spark: SparkSession, sf_dir: str, name: str) -> None:
     plans/r09/p33_span_scrub_after.txt).  Disable with
     SQLRS_SCAN_PARALLELIZE=0.
     """
-    if os.environ.get("SQLRS_SCAN_PARALLELIZE", "1") == "0":
-        return
-    path = f"{sf_dir}/{name}.parquet"
     df = load_table(spark, sf_dir, name)
+    if os.environ.get("SQLRS_SCAN_PARALLELIZE", "1") == "0":
+        return df
     try:
         par = spark.sparkContext.defaultParallelism
-        units, rows = _scan_units(path)
+        units, rows = catalog(spark).layout(f"{sf_dir}/{name}.parquet")
     except Exception:  # noqa: BLE001 — layout probing must never break a read
-        return
-    if units >= par or rows < 32 * par:
-        return
-    df.repartition(par).createOrReplaceTempView(name)
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = f"{sf_dir}/{name}.parquet"
-    if name == "events":
-        # events.ts has shipped as both TIMESTAMP(NANOS) (round 1) and naive
-        # timestamp[us] (current testdata).  NANOS is rejected by Spark's
-        # vectorized reader, so keep the nanos-as-long fallback: if the file
-        # is NANOS the column surfaces as bigint and gets truncated to
-        # micros (the same truncation DuckDB applies); a micros file reads
-        # straight through as TIMESTAMP_NTZ and the branch is a no-op.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(path)
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:
-    """Register each parquet table as a temp view named by table name."""
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+    if units >= par or rows < 32 * par:
+        return df
+    return df.repartition(par)

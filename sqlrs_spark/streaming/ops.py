@@ -81,8 +81,11 @@ def _drain_memory_sink(stream_df: DataFrame, query_name: str, mode: str) -> Data
         )
         q.awaitTermination()
         out = spark.table(name)
-        # materialize before the memory sink is dropped
-        result = spark.createDataFrame(out.collect(), out.schema)
+        # materialize before the memory sink is dropped, through Arrow: the
+        # result plans as a JVM-resident LocalTableScan, where a list of
+        # collected Rows would plan as a Scan ExistingRDD that every
+        # downstream job re-reads through Python workers
+        result = spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         # a failed query must not stay running, nor leak its scratch (the
         # leak this helper exists to stop) nor its memory-sink temp view

@@ -133,3 +133,21 @@ def test_s02_stream_sessions_match_batch_twin(spark, sf_dir):
         S["x10_sessionization"].fn(spark, sf_dir).select("user_id", "session_id").distinct().count()
     )
     assert stream_total == batch_total, (stream_total, batch_total)
+
+
+def test_drained_result_is_jvm_resident(spark, sf_dir):
+    """The memory-sink drain hands back an Arrow-built LocalTableScan, not
+    a Scan ExistingRDD that downstream jobs would re-read through Python
+    workers."""
+    from sqlrs_spark.streaming.ops import read_events_stream, run_to_completion
+
+    counts = read_events_stream(spark, sf_dir).groupBy("event_type").count()
+    out = run_to_completion(counts, "drain_plan")
+    qe = out.orderBy("event_type")._jdf.queryExecution()
+    assert "ExistingRDD" not in qe.executedPlan().toString()
+    assert "LocalRelation" in qe.optimizedPlan().toString()
+    want = {
+        r["event_type"]: r["count"]
+        for r in spark.read.parquet(f"{sf_dir}/events.parquet").groupBy("event_type").count().collect()
+    }
+    assert {r["event_type"]: r["count"] for r in out.collect()} == want
