@@ -58,12 +58,14 @@ def materialize_then_rm(df: DataFrame, *paths: str) -> DataFrame:
     bench warm+timed invocation leaked a full copy — multiple GB of /tmp
     per run at the 1000x replica.  Their *results* are tiny bounded
     aggregates, so materializing them (the same rows the caller would
-    collect) lets the scratch be removed eagerly.
+    collect) lets the scratch be removed eagerly.  Through Arrow, as the
+    streaming drain does, the result plans as a JVM-resident LocalTableScan
+    rather than a Scan ExistingRDD re-read through Python workers.
     """
     import shutil
 
     try:
-        out = df.sparkSession.createDataFrame(df.collect(), df.schema)
+        out = df.sparkSession.createDataFrame(df.toArrow(), df.schema)
     finally:
         # failure paths (task OOM, interrupt, bad data) must not leak the
         # scratch this helper exists to remove

@@ -148,8 +148,20 @@ def test_literal_roundtrip_fuzz(session, payload):
 
 
 def test_alias_in_where_still_works(session):
-    got = session.sql("select id+1 as a from fuzz_t where a = 2").collect()
-    assert [r.a for r in got] == [2]
+    session.spark.sql(
+        "CREATE OR REPLACE TEMP VIEW fuzz_a1 AS SELECT * FROM VALUES (1),(2),(3) AS v(v1)"
+    )
+    session.spark.sql(
+        "CREATE OR REPLACE TEMP VIEW fuzz_a2 AS SELECT * FROM VALUES (1,10),(2,20) AS v(v1, a)"
+    )
+    for query, want in [
+        ("select id+1 as a from fuzz_t where a = 2", [2]),
+        # a real column named like the alias keeps Spark semantics
+        ("select v1+100 as a from fuzz_a2 where a >= 20", [102]),
+        # nested expression positions are substituted too
+        ("select v1*2 as a from fuzz_a1 where a + 1 >= 5 and not (a = 6)", [4]),
+    ]:
+        assert sorted(r.a for r in session.sql(query).collect()) == want, query
 
 
 def test_offset_limit_swap_still_works(session):

@@ -136,18 +136,25 @@ def test_s02_stream_sessions_match_batch_twin(spark, sf_dir):
 
 
 def test_drained_result_is_jvm_resident(spark, sf_dir):
-    """The memory-sink drain hands back an Arrow-built LocalTableScan, not
+    """The memory-sink drain and the sink round-trip helper
+    (``materialize_then_rm``) hand back an Arrow-built LocalTableScan, not
     a Scan ExistingRDD that downstream jobs would re-read through Python
     workers."""
+    from sqlrs_spark.operators.common import materialize_then_rm
     from sqlrs_spark.streaming.ops import read_events_stream, run_to_completion
 
+    batch_counts = spark.read.parquet(f"{sf_dir}/events.parquet").groupBy("event_type").count()
+    want = {r["event_type"]: r["count"] for r in batch_counts.collect()}
     counts = read_events_stream(spark, sf_dir).groupBy("event_type").count()
-    out = run_to_completion(counts, "drain_plan")
-    qe = out.orderBy("event_type")._jdf.queryExecution()
-    assert "ExistingRDD" not in qe.executedPlan().toString()
-    assert "LocalRelation" in qe.optimizedPlan().toString()
-    want = {
-        r["event_type"]: r["count"]
-        for r in spark.read.parquet(f"{sf_dir}/events.parquet").groupBy("event_type").count().collect()
-    }
-    assert {r["event_type"]: r["count"] for r in out.collect()} == want
+    scratch = tempfile.mkdtemp(prefix="mat_")
+    batch_counts.write.parquet(f"{scratch}/counts")
+    outs = [
+        run_to_completion(counts, "drain_plan"),
+        materialize_then_rm(spark.read.parquet(f"{scratch}/counts"), scratch),
+    ]
+    assert not os.path.exists(scratch)
+    for out in outs:
+        qe = out.orderBy("event_type")._jdf.queryExecution()
+        assert "ExistingRDD" not in qe.executedPlan().toString()
+        assert "LocalRelation" in qe.optimizedPlan().toString()
+        assert {r["event_type"]: r["count"] for r in out.collect()} == want
